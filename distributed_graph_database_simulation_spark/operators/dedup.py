@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import barrier_t, checkpoint_dir
+from ..session import barrier
 from ..sources.tables import load_table, spread_small_scan
 
 JACCARD_T = 0.5
@@ -391,7 +391,7 @@ def minhash_lsh_df(docs: DataFrame) -> DataFrame:
 
     df-level entry point so callers (bench warm-up included) can run the
     IDENTICAL plan shape — including the persist, whose InMemoryTableScan
-    feeds the wide signature aggregate — on any documents-shaped frame.
+    feeds the row-local signature kernel — on any documents-shaped frame.
     """
     # The shingle table feeds signature generation AND both sides of the
     # verification join: persist it so the scan+split+ngram pipeline runs
@@ -1142,27 +1142,22 @@ def dedup_clusters_df(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """df-level :func:`dedup_clusters` (same pattern as minhash_lsh_df), so
     pipeline compositions can cluster an already-filtered corpus instead of
     the raw table."""
-    from .graph_analytics import fused_min_label_loop
+    from .graph_analytics import min_label_loop
 
-    ck = checkpoint_dir(spark)
     pairs = minhash_lsh_df(docs).select("doc_a", "doc_b")
-    edges = (
+    edges = barrier(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .distinct()
-        .transform(barrier_t(eager=True, ckdir=ck))
+        .distinct(),
+        eager=True,
     )
-    labels = (
+    labels = barrier(
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-        .transform(barrier_t(eager=True, ckdir=ck))
+        .withColumn("cluster_id", F.col("doc_id")),
+        eager=True,
     )
-    # Shared min-label loop (fuse=1 — see the batch-of-K A/B note in
-    # graph_analytics.fused_min_label_loop: fusing measured no win).
-    labels = fused_min_label_loop(
-        labels, edges, ["doc_id"], "cluster_id", ck, max_iterations=50
-    )
+    labels = min_label_loop(labels, edges, ["doc_id"], "cluster_id", max_iterations=50)
     return labels.select(
         "doc_id",
         "cluster_id",

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import barrier, barrier_observed, barrier_t, checkpoint_dir
+from ..session import barrier, barrier_observed
 
 
 def vertices(graphs: DataFrame) -> DataFrame:
@@ -55,94 +55,66 @@ def undirected(edges: DataFrame) -> DataFrame:
     ).distinct()
 
 
-# r16 note (guide §1 "measure first"): a batch-of-K-supersteps variant of
-# the min-label loops (K lazy update steps per driver job, convergence
-# checked on the block's last step — sound by monotonicity) was built and
-# A/B'd at K in {1, 2, 4} on g_connected_components_scale (warm 1.5 / 1.5 /
-# 2.3 s) and link_entity_clusters (19 rounds; warm 10.6 / — / 11.1 s): NO
-# win even on the high-diameter loop, because the per-round floor is paid
-# per SHUFFLE STAGE (AQE materializes each exchange as its own query
-# stage), not per driver action — fusing K steps into one action leaves the
-# stage count unchanged and adds up to K-1 no-op supersteps past the
-# fixpoint. The helper below is kept (used by the loops; fuse=1 == the
-# classic loop) so the block shape stays testable, with fuse=1 the default.
-SUPERSTEP_FUSE = 1
+# One update step per barrier: batching K steps into one action was A/B'd
+# at K in {1, 2, 4} (r16; g_connected_components_scale warm 1.5 / 1.5 /
+# 2.3 s) and never won, because the per-round floor is paid per shuffle
+# stage (AQE runs each exchange as its own query stage), not per driver
+# action, and a batch adds up to K-1 no-op steps past the fixpoint.
 
 
-def fused_min_label_loop(
+def min_label_step(labels: DataFrame, edges: DataFrame, keys: list[str],
+                   label_col: str) -> DataFrame:
+    """One min-label superstep: label := min over self and in-neighbors.
+
+    The pre-step label rides through the aggregate as ``_old`` (max over
+    {old, NULL…} = the one old label), so the convergence count can be
+    taken on the same shuffle. Columns: ``keys + [label_col, "_old"]``.
+    """
+    vcol = keys[-1]
+    group = list(keys[:-1])
+    lbl, e = labels.alias("lbl"), edges.alias("e")
+    cond = F.col(f"lbl.{vcol}") == F.col("e.src")
+    for g in group:
+        cond = cond & (F.col(f"lbl.{g}") == F.col(f"e.{g}"))
+    msgs = lbl.join(e, on=cond).select(
+        *[F.col(f"e.{g}").alias(g) for g in group],
+        F.col("e.dst").alias(vcol),
+        F.col(f"lbl.{label_col}").alias(label_col),
+    )
+    old_t = dict(labels.dtypes)[label_col]
+    return (
+        labels.withColumn("_old", F.col(label_col))
+        .unionByName(msgs.withColumn("_old", F.lit(None).cast(old_t)))
+        .groupBy(*keys)
+        .agg(F.min(label_col).alias(label_col), F.max("_old").alias("_old"))
+    )
+
+
+def min_label_loop(
     labels: DataFrame,
     edges: DataFrame,
     keys: list[str],
     label_col: str,
-    ck,
     max_iterations: int = 50,
-    fuse: int | None = None,
 ) -> DataFrame:
-    """Min-label propagation to the fixpoint, ``fuse`` supersteps per job.
+    """Min-label propagation to the fixpoint, one :func:`min_label_step`
+    per barrier.
 
     ``labels``: one row per vertex, columns ``keys + [label_col]`` (the last
     key is the vertex id; any preceding keys are grouping columns such as
     ``graph_id``). ``edges``: ``keys[:-1] + [src, dst]``, message direction
     src -> dst. Returns the converged labels (same schema as ``labels``).
-
-    Semantics are EXACTLY the classic one-step-per-job loop's: the update
-    (label := min over self and in-neighbors) is monotone non-increasing and
-    idempotent at the fixpoint, so (a) steps applied past convergence are
-    identities, and (b) "the block's LAST step changed no label" holds iff
-    the fixpoint was reached at or before that step. At fuse=1 (the default
-    — see the A/B note above) every block is one classic superstep with the
-    convergence count riding the update shuffle.
     """
-    if fuse is None:
-        fuse = SUPERSTEP_FUSE
-    vcol = keys[-1]
-    group = list(keys[:-1])
-    old_t = dict(labels.dtypes)[label_col]
-    steps = 0
-    while steps < max_iterations:
-        k = min(fuse, max_iterations - steps)
-        cur = labels
-        for j in range(k):
-            lbl, e = cur.alias("lbl"), edges.alias("e")
-            cond = F.col(f"lbl.{vcol}") == F.col("e.src")
-            for g in group:
-                cond = cond & (F.col(f"lbl.{g}") == F.col(f"e.{g}"))
-            msgs = lbl.join(e, on=cond).select(
-                *[F.col(f"e.{g}").alias(g) for g in group],
-                F.col("e.dst").alias(vcol),
-                F.col(f"lbl.{label_col}").alias(label_col),
-            )
-            if j == k - 1:
-                # Last step of the block: thread the pre-step label through
-                # the aggregate (max over {old, NULL…} = the one old label)
-                # so the convergence count rides the same shuffle.
-                cur = (
-                    cur.withColumn("_old", F.col(label_col))
-                    .unionByName(msgs.withColumn("_old", F.lit(None).cast(old_t)))
-                    .groupBy(*keys)
-                    .agg(
-                        F.min(label_col).alias(label_col),
-                        F.max("_old").alias("_old"),
-                    )
-                )
-            else:
-                cur = (
-                    cur.unionByName(msgs)
-                    .groupBy(*keys)
-                    .agg(F.min(label_col).alias(label_col))
-                )
+    for _ in range(max_iterations):
         # Convergence stat rides the checkpoint materialization as an
         # observation — one action per superstep instead of checkpoint +
         # count (r16, guide §1; see session.barrier_observed).
         cur, m = barrier_observed(
-            cur,
+            min_label_step(labels, edges, keys, label_col),
             [F.count_if(F.col(label_col) < F.col("_old")).alias("n_changed")],
-            ckdir=ck,
         )
-        n_changed = int(m["n_changed"])
         labels = cur.drop("_old")
-        steps += k
-        if n_changed == 0:  # the block's last step was an identity -> fixpoint
+        if int(m["n_changed"]) == 0:
             break
     return labels
 
@@ -152,22 +124,19 @@ def connected_components(
     graphs: DataFrame,
     edges: DataFrame,
     max_iterations: int = 50,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Min-label propagation over the undirected closure (Pregel pattern,
     per Pregelix — PAPERS.md). Converges in O(diameter) supersteps; each
     superstep is one shuffle on (graph_id, vertex), run through the shared
-    :func:`fused_min_label_loop` (fuse=1 — see its batch-of-K A/B note).
+    :func:`min_label_loop`.
     Returns (graph_id, vertex, component), component = min reachable id.
     """
-    ck = checkpoint_dir(spark)
-    ue = barrier(undirected(edges), eager=True, ckdir=ck)
+    ue = barrier(undirected(edges), eager=True)
     labels = barrier(
-        vertices(graphs).withColumn("component", F.col("vertex")), eager=True, ckdir=ck
+        vertices(graphs).withColumn("component", F.col("vertex")), eager=True
     )
-    return fused_min_label_loop(
-        labels, ue, ["graph_id", "vertex"], "component", ck,
-        max_iterations=max_iterations,
+    return min_label_loop(
+        labels, ue, ["graph_id", "vertex"], "component", max_iterations=max_iterations
     )
 
 
@@ -176,7 +145,6 @@ def label_propagation(
     graphs: DataFrame,
     edges: DataFrame,
     iterations: int = 4,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Synchronous label-propagation communities (fixed iterations).
 
@@ -193,9 +161,8 @@ def label_propagation(
     """
     from pyspark.sql.window import Window
 
-    ck = checkpoint_dir(spark)
-    ue = barrier(undirected(edges), eager=True, ckdir=ck)
-    base = barrier(vertices(graphs), eager=True, ckdir=ck)
+    ue = barrier(undirected(edges), eager=True)
+    base = barrier(vertices(graphs), eager=True)
     labels = base.withColumn("label", F.col("vertex"))
     for it in range(1, iterations + 1):
         lbl, e = labels.alias("lbl"), ue.alias("e")
@@ -225,8 +192,8 @@ def label_propagation(
                 F.coalesce("new_label", "label").alias("label"),
             )
         )
-        if it % checkpoint_every == 0 or it == iterations:
-            labels = barrier(labels, eager=True, ckdir=ck)
+        if it % 2 == 0 or it == iterations:
+            labels = barrier(labels, eager=True)
     return labels
 
 
@@ -244,9 +211,8 @@ def kcore(
     per round over the shrinking survivor set; same one-job-per-superstep
     barrier/termination fold as the other loops. Returns (graph_id, vertex).
     """
-    ck = checkpoint_dir(spark)
-    ue = barrier(undirected(edges), eager=True, ckdir=ck)
-    survivors = barrier(vertices(graphs), eager=True, ckdir=ck)
+    ue = barrier(undirected(edges), eager=True)
+    survivors = barrier(vertices(graphs), eager=True)
     n_prev = survivors.count()
     for it in range(1, max_iterations + 1):
         deg = (
@@ -258,7 +224,6 @@ def kcore(
         survivors, m = barrier_observed(
             deg.filter(F.col("deg") >= k).select("graph_id", "vertex"),
             [F.count(F.lit(1)).alias("n")],
-            ckdir=ck,
         )
         n_now = int(m["n"])
         if n_now == n_prev:
@@ -338,7 +303,6 @@ def sssp(
     edges: DataFrame,
     start: int,
     max_iterations: int = 100,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Single-source shortest paths over weighted ``edges(src, dst, weight)``
     — Bellman-Ford as supersteps (the weighted generalization of BFS; with
@@ -352,11 +316,9 @@ def sssp(
     from pyspark.storagelevel import StorageLevel
 
     edges = edges.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
-    ck = checkpoint_dir(spark)
     dists = barrier(
         spark.createDataFrame([(start, 0)], "vertex INT, distance BIGINT"),
         eager=True,
-        ckdir=ck,
     )
     frontier = dists
     for it in range(1, max_iterations + 1):
@@ -390,14 +352,12 @@ def sssp(
         # Termination stat rides the checkpoint materialization as an
         # observation — one action per superstep (r16, guide §1; see
         # session.barrier_observed).
-        improved, m = barrier_observed(
-            improved, [F.count(F.lit(1)).alias("n")], ckdir=ck
-        )
+        improved, m = barrier_observed(improved, [F.count(F.lit(1)).alias("n")])
         if int(m["n"]) == 0:
             break
         dists = dists.join(improved, "vertex", "left_anti").unionByName(improved)
-        if it % checkpoint_every == 0:
-            dists = barrier(dists, eager=True, ckdir=ck)
+        if it % 5 == 0:
+            dists = barrier(dists, eager=True)
         frontier = improved
     edges.unpersist()
     return dists
@@ -409,7 +369,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Fixed-iteration PageRank (power iteration, dangling mass to uniform).
 
@@ -425,33 +384,30 @@ def pagerank(
     # materialized once instead of being re-joined/re-aggregated inside every
     # iteration's lineage (one fewer join per superstep; at cluster scale,
     # one fewer broadcast per superstep).
-    ck = checkpoint_dir(spark)
-    base = (
+    base = barrier(
         vertices(graphs)
-        .join(n_by_graph, "graph_id")
-        .transform(barrier_t(eager=True, ckdir=ck))
+        .join(n_by_graph, "graph_id"),
+        eager=True,
     )
     out_deg = barrier(
         edges.groupBy("graph_id", F.col("src").alias("vertex")).agg(
             F.count("*").alias("out_degree")
         ),
         eager=True,
-        ckdir=ck,
     )
     # The dangling-vertex SET is loop-invariant (out_degree is static):
     # materialize it once so each superstep's dangling-mass pass is a
     # broadcast semi-join + tiny agg, not a recomputed anti-join.
-    dangling_verts = (
+    dangling_verts = barrier(
         base.select("graph_id", "vertex")
-        .join(out_deg, ["graph_id", "vertex"], "left_anti")
-        .transform(barrier_t(eager=True, ckdir=ck))
+        .join(out_deg, ["graph_id", "vertex"], "left_anti"),
+        eager=True,
     )
     ranks = barrier(
         base.select(
             "graph_id", "vertex", (F.lit(1.0) / F.col("n_vertices")).alias("rank")
         ),
         eager=True,
-        ckdir=ck,
     )
     for it in range(1, iterations + 1):
         r, e = ranks.join(out_deg, ["graph_id", "vertex"]).alias("r"), edges.alias("e")
@@ -491,8 +447,8 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if it % checkpoint_every == 0 or it == iterations:
-            ranks = barrier(ranks, eager=True, ckdir=ck)
+        if it % 3 == 0 or it == iterations:
+            ranks = barrier(ranks, eager=True)
     # Final ranks are checkpointed (it == iterations), so the cached edge
     # table is no longer referenced: release it rather than leak per call.
     edges.unpersist()
@@ -504,7 +460,6 @@ def multi_source_bfs(
     edges: DataFrame,
     sources: DataFrame,
     max_levels: int = 10_000,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Landmark BFS: one level-synchronous BFS per (graph_id, source) pair,
     ALL sources advancing in the same superstep loop.
@@ -523,7 +478,6 @@ def multi_source_bfs(
     from pyspark.storagelevel import StorageLevel
 
     edges = edges.repartition("graph_id", "src").persist(StorageLevel.MEMORY_AND_DISK)
-    ck = checkpoint_dir(spark)
     # Constraint propagation must be off for this loop: ``vertex`` starts as
     # an alias of ``source``, and the derived equality constraint survives
     # into the iterated union-of-checkpoints, where Spark's
@@ -537,11 +491,11 @@ def multi_source_bfs(
     prev = spark.conf.get(conf_key, "true")
     spark.conf.set(conf_key, "false")
     try:
-        sources = barrier(sources.select("graph_id", "source"), eager=True, ckdir=ck)
+        sources = barrier(sources.select("graph_id", "source"), eager=True)
         frontier = sources.select(
             "graph_id", "source", F.col("source").alias("vertex")
         ).withColumn("level", F.lit(0).cast("int"))
-        visited = barrier(frontier, eager=True, ckdir=ck)
+        visited = barrier(frontier, eager=True)
         frontier = visited
         for level in range(1, max_levels + 1):
             f, e = frontier.alias("f"), edges.alias("e")
@@ -558,13 +512,13 @@ def multi_source_bfs(
                 .withColumn("level", F.lit(level).cast("int"))
             )
             next_frontier, m = barrier_observed(
-                next_frontier, [F.count(F.lit(1)).alias("n")], ckdir=ck
+                next_frontier, [F.count(F.lit(1)).alias("n")]
             )
             if int(m["n"]) == 0:
                 break
             visited = visited.union(next_frontier)
-            if level % checkpoint_every == 0:
-                visited = barrier(visited, eager=True, ckdir=ck)
+            if level % 5 == 0:
+                visited = barrier(visited, eager=True)
             frontier = next_frontier
     finally:
         spark.conf.set(conf_key, prev)
@@ -750,7 +704,6 @@ def personalized_pagerank(
     sources: DataFrame,
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Personalized PageRank / random walk with restart: teleportation goes
     to the per-graph SOURCE SET (uniform over it) instead of all vertices —
@@ -770,8 +723,7 @@ def personalized_pagerank(
     from pyspark.storagelevel import StorageLevel
 
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    ck = checkpoint_dir(spark)
-    base = barrier(vertices(graphs), eager=True, ckdir=ck)
+    base = barrier(vertices(graphs), eager=True)
     src_w = (
         sources.select("graph_id", "vertex")
         .distinct()
@@ -785,23 +737,20 @@ def personalized_pagerank(
             "graph_id", "vertex", F.coalesce("tele", F.lit(0.0)).alias("tele")
         ),
         eager=True,
-        ckdir=ck,
     )
     out_deg = barrier(
         edges.groupBy("graph_id", F.col("src").alias("vertex")).agg(
             F.count("*").alias("out_degree")
         ),
         eager=True,
-        ckdir=ck,
     )
-    dangling_verts = (
-        base.join(out_deg, ["graph_id", "vertex"], "left_anti")
-        .transform(barrier_t(eager=True, ckdir=ck))
+    dangling_verts = barrier(
+        base.join(out_deg, ["graph_id", "vertex"], "left_anti"),
+        eager=True,
     )
     ranks = barrier(
         tele.select("graph_id", "vertex", F.col("tele").alias("rank")),
         eager=True,
-        ckdir=ck,
     )
     for it in range(1, iterations + 1):
         r, e = ranks.join(out_deg, ["graph_id", "vertex"]).alias("r"), edges.alias("e")
@@ -838,8 +787,8 @@ def personalized_pagerank(
                 ).alias("rank"),
             )
         )
-        if it % checkpoint_every == 0 or it == iterations:
-            ranks = barrier(ranks, eager=True, ckdir=ck)
+        if it % 3 == 0 or it == iterations:
+            ranks = barrier(ranks, eager=True)
     edges.unpersist()
     return ranks
 
@@ -875,14 +824,13 @@ def strongly_connected_components(
     """
     from pyspark.storagelevel import StorageLevel
 
-    ck = checkpoint_dir(spark)
     edges = (
         edges.select("graph_id", "src", "dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    remaining = barrier(vertices(graphs), eager=True, ckdir=ck)
+    remaining = barrier(vertices(graphs), eager=True)
     labeled_parts: list[DataFrame] = []
 
     # Same constraint-propagation guard as multi_source_bfs: the color loop
@@ -892,7 +840,7 @@ def strongly_connected_components(
     prev_conf = spark.conf.get(conf_key, "true")
     spark.conf.set(conf_key, "false")
     try:
-        labeled_parts = _scc_rounds(spark, edges, remaining, max_rounds, ck)
+        labeled_parts = _scc_rounds(spark, edges, remaining, max_rounds)
     finally:
         spark.conf.set(conf_key, prev_conf)
     edges.unpersist()
@@ -904,7 +852,7 @@ def strongly_connected_components(
     return out
 
 
-def _scc_rounds(spark, edges, remaining, max_rounds, ck) -> list[DataFrame]:
+def _scc_rounds(spark, edges, remaining, max_rounds) -> list[DataFrame]:
     labeled_parts: list[DataFrame] = []
     for _ in range(max_rounds):
         if remaining.isEmpty():
@@ -913,7 +861,7 @@ def _scc_rounds(spark, edges, remaining, max_rounds, ck) -> list[DataFrame]:
             edges.join(remaining.withColumnRenamed("vertex", "src"), ["graph_id", "src"], "left_semi")
             .join(remaining.withColumnRenamed("vertex", "dst"), ["graph_id", "dst"], "left_semi")
         )
-        e_r = barrier(e_r, eager=True, ckdir=ck)
+        e_r = barrier(e_r, eager=True)
         # --- 1. trim to fixpoint -------------------------------------------
         n_rem = remaining.count()
         while True:
@@ -924,16 +872,14 @@ def _scc_rounds(spark, edges, remaining, max_rounds, ck) -> list[DataFrame]:
             )
             # n_core rides the checkpoint action (r16, guide §1); n_rem is
             # carried forward in the driver (remaining == last round's core).
-            core, m = barrier_observed(
-                core, [F.count(F.lit(1)).alias("n")], ckdir=ck
-            )
+            core, m = barrier_observed(core, [F.count(F.lit(1)).alias("n")])
             n_core = int(m["n"])
             if n_core == n_rem:
                 break
             trimmed = remaining.join(core, ["graph_id", "vertex"], "left_anti").select(
                 "graph_id", "vertex", F.col("vertex").alias("scc_id")
             )
-            labeled_parts.append(barrier(trimmed, eager=True, ckdir=ck))
+            labeled_parts.append(barrier(trimmed, eager=True))
             remaining = core
             n_rem = n_core
             if n_core == 0:
@@ -942,14 +888,11 @@ def _scc_rounds(spark, edges, remaining, max_rounds, ck) -> list[DataFrame]:
                 e_r.join(remaining.withColumnRenamed("vertex", "src"), ["graph_id", "src"], "left_semi")
                 .join(remaining.withColumnRenamed("vertex", "dst"), ["graph_id", "dst"], "left_semi"),
                 eager=True,
-                ckdir=ck,
             )
         if n_rem == 0:  # trim emptied the round (count carried from the loop)
             break
         # --- 2. forward max coloring ---------------------------------------
-        colors = barrier(
-            remaining.withColumn("color", F.col("vertex")), eager=True, ckdir=ck
-        )
+        colors = barrier(remaining.withColumn("color", F.col("vertex")), eager=True)
         while True:
             c, e = colors.alias("c"), e_r.alias("e")
             msgs = (
@@ -975,12 +918,11 @@ def _scc_rounds(spark, edges, remaining, max_rounds, ck) -> list[DataFrame]:
             new_colors, m = barrier_observed(
                 new_colors,
                 [F.count_if(F.col("color") > F.col("old_color")).alias("n")],
-                ckdir=ck,
             )
             colors = new_colors.drop("old_color")
             if int(m["n"]) == 0:
                 break
-        colors = barrier(colors, eager=True, ckdir=ck)
+        colors = barrier(colors, eager=True)
         # --- 3. backward sweep from the roots ------------------------------
         roots = colors.where(F.col("color") == F.col("vertex")).select(
             "graph_id", F.col("vertex").alias("source")
@@ -1004,13 +946,11 @@ def _scc_rounds(spark, edges, remaining, max_rounds, ck) -> list[DataFrame]:
                 "graph_id", "vertex", "scc_id"
             ),
             eager=True,
-            ckdir=ck,
         )
         labeled_parts.append(found)
         remaining = barrier(
             remaining.join(found, ["graph_id", "vertex"], "left_anti"),
             eager=True,
-            ckdir=ck,
         )
     else:
         if not remaining.isEmpty():
@@ -1052,7 +992,6 @@ def betweenness_sampled(
     edges = edges.select("graph_id", "src", "dst").where(
         F.col("src") != F.col("dst")
     ).distinct().repartition("graph_id", "src").persist(StorageLevel.MEMORY_AND_DISK)
-    ck = checkpoint_dir(spark)
     conf_key = "spark.sql.constraintPropagation.enabled"
     prev_conf = spark.conf.get(conf_key, "true")
     spark.conf.set(conf_key, "false")
@@ -1073,7 +1012,7 @@ def betweenness_sampled(
                 F.lit(0).cast("int").alias("level"),
                 F.lit(1.0).alias("sigma"),
             ),
-            eager=True, ckdir=ck,
+            eager=True,
         )
         visited = frontier
         levels = [frontier]
@@ -1093,15 +1032,13 @@ def betweenness_sampled(
                 .withColumn("level", F.lit(level).cast("int"))
                 .select("graph_id", "source", "vertex", "level", "sigma")
             )
-            nxt, m = barrier_observed(
-                nxt, [F.count(F.lit(1)).alias("n")], ckdir=ck
-            )
+            nxt, m = barrier_observed(nxt, [F.count(F.lit(1)).alias("n")])
             if int(m["n"]) == 0:
                 break
             visited = visited.unionByName(nxt)
             levels.append(nxt)
             if level % 5 == 0:
-                visited = barrier(visited, eager=True, ckdir=ck)
+                visited = barrier(visited, eager=True)
             frontier = nxt
         # ---- backward pass: dependency accumulation ----------------------
         lmax = len(levels) - 1
@@ -1140,7 +1077,7 @@ def betweenness_sampled(
                     F.coalesce("delta", F.lit(0.0)).alias("delta"),
                 )
             )
-            deltas_by_level[lvl] = barrier(lvl_delta, eager=True, ckdir=ck)
+            deltas_by_level[lvl] = barrier(lvl_delta, eager=True)
         all_deltas = deltas_by_level[lmax]
         for lvl in range(lmax - 1, -1, -1):
             all_deltas = all_deltas.unionByName(deltas_by_level[lvl])
@@ -1151,7 +1088,7 @@ def betweenness_sampled(
             # Collapse the lineage once before aggregating; the slices are
             # already individually checkpointed, so this is one bounded
             # materialization, not extra recompute.
-            all_deltas = barrier(all_deltas, eager=True, ckdir=ck)
+            all_deltas = barrier(all_deltas, eager=True)
         n_by_graph = graphs.select("graph_id", F.col("n").cast("double").alias("nv"))
         out = (
             all_deltas.where(F.col("vertex") != F.col("source"))
@@ -1179,7 +1116,6 @@ def sssp_with_predecessors(
     edges: DataFrame,
     start: int,
     max_iterations: int = 100,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """:func:`sssp` carrying a shortest-path TREE: each settled vertex keeps
     a predecessor. Returns (vertex, distance, pred); pred is NULL at the
@@ -1200,14 +1136,12 @@ def sssp_with_predecessors(
     from pyspark.storagelevel import StorageLevel
 
     edges = edges.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
-    ck = checkpoint_dir(spark)
     # The relaxation loop carries distances ONLY — predecessors come from
     # the post-pass below, so shipping a pred through every superstep's
     # shuffle would be dead weight.
     dists = barrier(
         spark.createDataFrame([(start, 0)], "vertex INT, distance BIGINT"),
         eager=True,
-        ckdir=ck,
     )
     frontier = dists
     for it in range(1, max_iterations + 1):
@@ -1234,14 +1168,12 @@ def sssp_with_predecessors(
             .select("vertex", "distance")
         )
         # Termination stat rides the checkpoint action (r16, guide §1).
-        improved, m = barrier_observed(
-            improved, [F.count(F.lit(1)).alias("n")], ckdir=ck
-        )
+        improved, m = barrier_observed(improved, [F.count(F.lit(1)).alias("n")])
         if int(m["n"]) == 0:
             break
         dists = dists.join(improved, "vertex", "left_anti").unionByName(improved)
-        if it % checkpoint_every == 0:
-            dists = barrier(dists, eager=True, ckdir=ck)
+        if it % 5 == 0:
+            dists = barrier(dists, eager=True)
         frontier = improved
     # Schedule-independent predecessors: min parent id over tight edges,
     # computed once after the distance fixpoint (an in-loop pred would
@@ -1296,7 +1228,6 @@ def pagerank_weighted(
     edges: DataFrame,
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """PageRank over WEIGHTED edges ``(graph_id, src, dst, weight)``: each
     vertex distributes its rank proportionally to outgoing edge weight
@@ -1315,30 +1246,27 @@ def pagerank_weighted(
 
     edges = edges.where(F.col("weight") > 0).persist(StorageLevel.MEMORY_AND_DISK)
     n_by_graph = graphs.select("graph_id", F.col("n").cast("double").alias("n_vertices"))
-    ck = checkpoint_dir(spark)
-    base = (
+    base = barrier(
         vertices(graphs)
-        .join(n_by_graph, "graph_id")
-        .transform(barrier_t(eager=True, ckdir=ck))
+        .join(n_by_graph, "graph_id"),
+        eager=True,
     )
     out_w = barrier(
         edges.groupBy("graph_id", F.col("src").alias("vertex")).agg(
             F.sum(F.col("weight").cast("double")).alias("out_weight")
         ),
         eager=True,
-        ckdir=ck,
     )
-    dangling_verts = (
+    dangling_verts = barrier(
         base.select("graph_id", "vertex")
-        .join(out_w, ["graph_id", "vertex"], "left_anti")
-        .transform(barrier_t(eager=True, ckdir=ck))
+        .join(out_w, ["graph_id", "vertex"], "left_anti"),
+        eager=True,
     )
     ranks = barrier(
         base.select(
             "graph_id", "vertex", (F.lit(1.0) / F.col("n_vertices")).alias("rank")
         ),
         eager=True,
-        ckdir=ck,
     )
     for it in range(1, iterations + 1):
         r = ranks.join(out_w, ["graph_id", "vertex"]).alias("r")
@@ -1380,8 +1308,8 @@ def pagerank_weighted(
                 ).alias("rank"),
             )
         )
-        if it % checkpoint_every == 0 or it == iterations:
-            ranks = barrier(ranks, eager=True, ckdir=ck)
+        if it % 3 == 0 or it == iterations:
+            ranks = barrier(ranks, eager=True)
     edges.unpersist()
     return ranks
 
@@ -1490,7 +1418,6 @@ def hyperball(
     edges: DataFrame,
     log2m: int = _HB_LOG2M_DEFAULT,
     max_t: int = 10_000,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Approximate neighborhood function N(t) per graph via HyperBall.
 
@@ -1512,13 +1439,12 @@ def hyperball(
     """
     from pyspark.storagelevel import StorageLevel
 
-    ck = checkpoint_dir(spark)
     edges = (
         edges.select("graph_id", "src", "dst")
         .repartition("graph_id", "dst")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    state = barrier(_hb_init_state(graphs, log2m), eager=True, ckdir=ck)
+    state = barrier(_hb_init_state(graphs, log2m), eager=True)
     rows = _hb_estimates(state, log2m)
     # reg_checksum rides along (exact BIGINT: sum of rho + register count —
     # a pure function of the register STATE, so a SQL oracle that rebuilds
@@ -1552,9 +1478,9 @@ def hyperball(
             .where(F.col("s.rho").isNull() | (F.col("c.rho") > F.col("s.rho")))
             .select(*keys, F.col("c.rho").alias("rho"))
         )
-        improved = barrier(improved, eager=False, ckdir=ck)
+        improved = barrier(improved, eager=False)
         state = state.join(improved, on=keys, how="left_anti").unionByName(improved)
-        state = barrier(state, eager=(t % checkpoint_every == 0), ckdir=ck)
+        state = barrier(state, eager=(t % 5 == 0))
         # ONE job per superstep (r15 fusion): the estimates collect
         # materializes the new state — improved included, through its lazy
         # barrier — and its exact register checksum doubles as the
@@ -1669,7 +1595,6 @@ def ktruss(
     edges: DataFrame,
     k: int,
     max_iterations: int = 1_000,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """The k-truss of each graph: the maximal subgraph in which every edge
     closes at least k-2 triangles *within the subgraph* (Cohen 2008 — the
@@ -1688,21 +1613,18 @@ def ktruss(
         raise ValueError(f"k must be >= 2, got {k}")
     from pyspark.storagelevel import StorageLevel
 
-    ck = checkpoint_dir(spark)
     canon = (
         undirected(edges)
         .filter(F.col("src") < F.col("dst"))
         .select("graph_id", "src", "dst")
     )
-    canon = barrier(canon, eager=True, ckdir=ck)
+    canon = barrier(canon, eager=True)
     n_edges = canon.count()
     for it in range(1, max_iterations + 1):
         with_support = _edge_support(canon)
         kept = with_support.where(F.col("support") >= k - 2)
         # Fixpoint stat rides the checkpoint action (r16, guide §1).
-        kept, m = barrier_observed(
-            kept, [F.count(F.lit(1)).alias("n")], ckdir=ck
-        )
+        kept, m = barrier_observed(kept, [F.count(F.lit(1)).alias("n")])
         n_kept = int(m["n"])
         canon = kept.select("graph_id", "src", "dst")
         if n_kept == n_edges:
@@ -1740,7 +1662,6 @@ def maximal_independent_set(
     graphs: DataFrame,
     edges: DataFrame,
     max_rounds: int = 1_000,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Luby's maximal independent set with deterministic hash priorities.
 
@@ -1756,7 +1677,6 @@ def maximal_independent_set(
     own neighbor); they are dropped first, matching the undirected-simple
     reading every other analytics operator uses.
     """
-    ck = checkpoint_dir(spark)
     from pyspark.storagelevel import StorageLevel
 
     ue = (
@@ -1766,9 +1686,7 @@ def maximal_independent_set(
     )
     # Active-set size rides each barrier action as an observation (r16,
     # guide §1 job count) — the loop-top count() jobs are gone.
-    active, m = barrier_observed(
-        vertices(graphs), [F.count(F.lit(1)).alias("n")], ckdir=ck
-    )
+    active, m = barrier_observed(vertices(graphs), [F.count(F.lit(1)).alias("n")])
     n_active = int(m["n"])
     chosen = None
     for rnd in range(1, max_rounds + 1):
@@ -1777,7 +1695,7 @@ def maximal_independent_set(
         pri = active.select(
             "graph_id", "vertex", _mis_priority(rnd).alias("p")
         )
-        pri = barrier(pri, eager=False, ckdir=ck)
+        pri = barrier(pri, eager=False)
         p_a, p_b, e = pri.alias("pa"), pri.alias("pb"), ue.alias("e")
         # max (priority, vertex) over each vertex's ACTIVE neighbors; the
         # struct max gives the deterministic tie-break for free
@@ -1808,7 +1726,7 @@ def maximal_independent_set(
             )
             .select("graph_id", "vertex", F.lit(rnd).cast("int").alias("round"))
         )
-        winners = barrier(winners, eager=True, ckdir=ck)
+        winners = barrier(winners, eager=True)
         chosen = winners if chosen is None else chosen.unionByName(winners)
         # deactivate winners and every neighbor of a winner
         w_nbrs = (
@@ -1825,9 +1743,7 @@ def maximal_independent_set(
         )
         dead = winners.select("graph_id", "vertex").unionByName(w_nbrs)
         active = active.join(dead, ["graph_id", "vertex"], "left_anti")
-        active, m = barrier_observed(
-            active, [F.count(F.lit(1)).alias("n")], ckdir=ck
-        )
+        active, m = barrier_observed(active, [F.count(F.lit(1)).alias("n")])
         n_active = int(m["n"])
     ue.unpersist()
     if chosen is None:
@@ -1863,7 +1779,6 @@ def maximal_matching(
     graphs: DataFrame,
     edges: DataFrame,
     max_rounds: int = 1_000,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Distributed maximal matching by local-max edge selection (the
     Israeli–Itai / Luby-style edge race): per round every still-active
@@ -1885,7 +1800,6 @@ def maximal_matching(
     """
     from pyspark.storagelevel import StorageLevel
 
-    ck = checkpoint_dir(spark)
     # Active-set size rides each barrier action as an observation (r16,
     # guide §1 job count) — the loop-top count() jobs are gone.
     active, m = barrier_observed(
@@ -1894,7 +1808,6 @@ def maximal_matching(
         .select("graph_id", "src", "dst")
         .distinct(),
         [F.count(F.lit(1)).alias("n")],
-        ckdir=ck,
     )
     n_active = int(m["n"])
     _ = graphs  # vertex universe not needed: isolated vertices never match
@@ -1912,7 +1825,7 @@ def maximal_matching(
                 F.col("dst").alias("d"),
             ).alias("pr"),
         )
-        pri = barrier(pri, eager=False, ckdir=ck)
+        pri = barrier(pri, eager=False)
         incidence = pri.select(
             "graph_id", F.col("src").alias("vertex"), "pr"
         ).unionByName(pri.select("graph_id", F.col("dst").alias("vertex"), "pr"))
@@ -1933,7 +1846,7 @@ def maximal_matching(
             .where((F.col("pr") == F.col("vm_s")) & (F.col("pr") == F.col("vm_d")))
             .select("graph_id", "src", "dst", F.lit(rnd).cast("int").alias("round"))
         )
-        winners = barrier(winners, eager=True, ckdir=ck)
+        winners = barrier(winners, eager=True)
         chosen = winners if chosen is None else chosen.unionByName(winners)
         matched_v = (
             winners.select("graph_id", F.col("src").alias("vertex"))
@@ -1950,9 +1863,7 @@ def maximal_matching(
                 "left_anti",
             )
         )
-        active, m = barrier_observed(
-            active, [F.count(F.lit(1)).alias("n")], ckdir=ck
-        )
+        active, m = barrier_observed(active, [F.count(F.lit(1)).alias("n")])
         n_active = int(m["n"])
     if chosen is None:
         return spark.createDataFrame([], "graph_id int, src int, dst int, round int")
@@ -1992,7 +1903,6 @@ def densest_subgraph(
     """
     from pyspark.storagelevel import StorageLevel
 
-    ck = checkpoint_dir(spark)
     ue = (
         undirected(edges)
         .where(F.col("src") != F.col("dst"))
@@ -2000,7 +1910,7 @@ def densest_subgraph(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    active = barrier(vertices(graphs), eager=True, ckdir=ck)
+    active = barrier(vertices(graphs), eager=True)
     peeled_parts = []
     stats: dict[int, list[tuple[int, int, int]]] = {}  # g -> [(t, n, m2)]
     for t in range(1, max_rounds + 1):
@@ -2037,12 +1947,11 @@ def densest_subgraph(
             )
             .select("graph_id", "vertex", F.lit(t).cast("int").alias("peel_round"))
         )
-        peel = barrier(peel, eager=True, ckdir=ck)
+        peel = barrier(peel, eager=True)
         peeled_parts.append(peel)
         active = barrier(
             active.join(peel, ["graph_id", "vertex"], "left_anti"),
             eager=True,
-            ckdir=ck,
         )
     out = peeled_parts[0]
     for p in peeled_parts[1:]:
@@ -2070,7 +1979,6 @@ def temporal_reachability(
     edges: DataFrame,
     sources: DataFrame,
     max_supersteps: int = 10_000,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Earliest-arrival reachability over a TEMPORAL graph: each edge
     (graph_id, src, dst, ts) is traversable only at its timestamp, and a
@@ -2095,7 +2003,6 @@ def temporal_reachability(
     """
     from pyspark.storagelevel import StorageLevel
 
-    ck = checkpoint_dir(spark)
     e = (
         edges.select("graph_id", "src", "dst", F.col("ts").cast("bigint").alias("ts"))
         .repartition("graph_id", "src")
@@ -2109,7 +2016,6 @@ def temporal_reachability(
             F.col("t0").cast("bigint").alias("earliest"),
         ),
         eager=True,
-        ckdir=ck,
     )
     keys = ["graph_id", "source", "vertex"]
     for it in range(1, max_supersteps + 1):
@@ -2143,12 +2049,11 @@ def temporal_reachability(
                     F.col("old").isNull() | (F.col("earliest") < F.col("old"))
                 ).alias("n")
             ],
-            ckdir=ck,
         )
         n_changed = int(m["n"])
         arr = new_arr.drop("old")
-        if it % checkpoint_every == 0:
-            arr = barrier(arr, eager=True, ckdir=ck)
+        if it % 3 == 0:
+            arr = barrier(arr, eager=True)
         if n_changed == 0:
             break
     e.unpersist()
@@ -2170,7 +2075,6 @@ def greedy_coloring(
     (graph_id, vertex, color int) — a proper coloring: no edge joins two
     same-colored vertices.
     """
-    ck = checkpoint_dir(spark)
     from pyspark.storagelevel import StorageLevel
 
     # Same Spark quirk multi_source_bfs documents: iterated unions of
@@ -2187,7 +2091,7 @@ def greedy_coloring(
     )
     try:
         remaining_v, m = barrier_observed(
-            vertices(graphs), [F.count(F.lit(1)).alias("n")], ckdir=ck
+            vertices(graphs), [F.count(F.lit(1)).alias("n")]
         )
         n_remaining = int(m["n"])
         colored = None
@@ -2211,18 +2115,18 @@ def greedy_coloring(
                     how="left_semi",
                 )
             )
-            sub_edges = barrier(sub_edges, eager=True, ckdir=ck)
-            mis = _mis_over_vertices(spark, remaining_v, sub_edges, ck)
+            sub_edges = barrier(sub_edges, eager=True)
+            mis = _mis_over_vertices(spark, remaining_v, sub_edges)
             batch = mis.select(
                 "graph_id", "vertex", F.lit(color).cast("int").alias("color")
             )
-            batch = barrier(batch, eager=True, ckdir=ck)
+            batch = barrier(batch, eager=True)
             colored = batch if colored is None else colored.unionByName(batch)
             remaining_v = remaining_v.join(
                 batch.select("graph_id", "vertex"), ["graph_id", "vertex"], "left_anti"
             )
             remaining_v, m = barrier_observed(
-                remaining_v, [F.count(F.lit(1)).alias("n")], ckdir=ck
+                remaining_v, [F.count(F.lit(1)).alias("n")]
             )
             n_remaining = int(m["n"])
         else:
@@ -2235,7 +2139,7 @@ def greedy_coloring(
     return colored
 
 
-def _mis_over_vertices(spark, vertex_set: DataFrame, ue: DataFrame, ck) -> DataFrame:
+def _mis_over_vertices(spark, vertex_set: DataFrame, ue: DataFrame) -> DataFrame:
     """Luby MIS over an explicit vertex set + undirected edge set (the
     inner loop of :func:`greedy_coloring`; same algebra as
     :func:`maximal_independent_set` with the universe passed in).
@@ -2256,7 +2160,6 @@ def _mis_over_vertices(spark, vertex_set: DataFrame, ue: DataFrame, ck) -> DataF
         pri = barrier(
             active.select("graph_id", "vertex", _mis_priority(rnd).alias("p")),
             eager=False,
-            ckdir=ck,
         )
         p_b, e = pri.alias("pb"), ue.alias("e")
         nbr_max = (
@@ -2282,7 +2185,7 @@ def _mis_over_vertices(spark, vertex_set: DataFrame, ue: DataFrame, ck) -> DataF
             )
             .select("graph_id", "vertex")
         )
-        winners = barrier(winners, eager=True, ckdir=ck)
+        winners = barrier(winners, eager=True)
         chosen = winners if chosen is None else chosen.unionByName(winners)
         w_nbrs = (
             ue.alias("e")
@@ -2297,7 +2200,6 @@ def _mis_over_vertices(spark, vertex_set: DataFrame, ue: DataFrame, ck) -> DataF
         active, m = barrier_observed(
             active.join(dead, ["graph_id", "vertex"], "left_anti"),
             [F.count(F.lit(1)).alias("n")],
-            ckdir=ck,
         )
         n_active = int(m["n"])
     if chosen is None:
@@ -2392,7 +2294,6 @@ def connected_components_contraction(
     graphs: DataFrame,
     edges: DataFrame,
     max_rounds: int = 100,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction — O(log |V|) rounds REGARDLESS of diameter (vs the
@@ -2407,7 +2308,6 @@ def connected_components_contraction(
     the oriented edge multiset stopped changing (count + order-insensitive
     hash checksum, one tiny aggregate riding the materialization job).
     """
-    ck = checkpoint_dir(spark)
 
     def canon(e: DataFrame) -> DataFrame:
         # orient max -> min: u > v
@@ -2417,7 +2317,7 @@ def connected_components_contraction(
             F.least("src", "dst").alias("v"),
         ).where(F.col("u") != F.col("v")).distinct()
 
-    cur = barrier(canon(edges), eager=True, ckdir=ck)
+    cur = barrier(canon(edges), eager=True)
 
     def sig(e: DataFrame):
         r = e.agg(
@@ -2445,7 +2345,7 @@ def connected_components_contraction(
             F.greatest("u", "v").alias("u"),
             F.least("u", "v").alias("v"),
         ).distinct()
-        cur = barrier(cur, eager=(rnd % checkpoint_every == 0), ckdir=ck)
+        cur = barrier(cur, eager=(rnd % 2 == 0))
         s = sig(cur)
         if s == prev:
             break
@@ -2489,7 +2389,6 @@ def hyperball_harmonic(
     edges: DataFrame,
     log2m: int = _HB_LOG2M_DEFAULT,
     max_t: int = 10_000,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Approximate harmonic centrality for EVERY vertex via HyperBall —
     the estimator HyperANF was built for (Boldi & Vigna, "In-Core
@@ -2510,20 +2409,18 @@ def hyperball_harmonic(
     """
     from pyspark.storagelevel import StorageLevel
 
-    ck = checkpoint_dir(spark)
     edges = (
         edges.select("graph_id", "src", "dst")
         .repartition("graph_id", "dst")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    state = barrier(_hb_init_state(graphs, log2m), eager=True, ckdir=ck)
+    state = barrier(_hb_init_state(graphs, log2m), eager=True)
     prev_est = _hb_vertex_estimates(state, log2m)
     acc = barrier(
         prev_est.select(
             "graph_id", "vertex", F.lit(0.0).alias("h"), F.col("est").alias("prev")
         ),
         eager=True,
-        ckdir=ck,
     )
     delta = state
     keys3 = ["graph_id", "vertex", "reg"]
@@ -2550,11 +2447,11 @@ def hyperball_harmonic(
             .where(F.col("s.rho").isNull() | (F.col("c.rho") > F.col("s.rho")))
             .select(*keys3, F.col("c.rho").alias("rho"))
         )
-        improved = barrier(improved, eager=False, ckdir=ck)
+        improved = barrier(improved, eager=False)
         if improved.count() == 0:
             break
         state = state.join(improved, on=keys3, how="left_anti").unionByName(improved)
-        state = barrier(state, eager=(t % checkpoint_every == 0), ckdir=ck)
+        state = barrier(state, eager=(t % 5 == 0))
         est_t = _hb_vertex_estimates(state, log2m)
         acc = (
             acc.alias("a")
@@ -2573,7 +2470,7 @@ def hyperball_harmonic(
                 F.coalesce(F.col("n.est"), F.col("a.prev")).alias("prev"),
             )
         )
-        acc = barrier(acc, eager=(t % checkpoint_every == 0), ckdir=ck)
+        acc = barrier(acc, eager=(t % 5 == 0))
         delta = improved
     edges.unpersist()
     return acc.select("graph_id", "vertex", F.col("h").alias("harmonic_est"))
@@ -2657,13 +2554,8 @@ def core_numbers(
     distributed coreness schedule). Returns (graph_id, vertex, coreness)
     over the full vertex universe (isolated vertices: coreness 0).
     """
-    ck = checkpoint_dir(spark)
-    ue = barrier(
-        undirected(edges).where(F.col("src") != F.col("dst")), eager=True, ckdir=ck
-    )
-    survivors, m = barrier_observed(
-        vertices(graphs), [F.count(F.lit(1)).alias("n")], ckdir=ck
-    )
+    ue = barrier(undirected(edges).where(F.col("src") != F.col("dst")), eager=True)
+    survivors, m = barrier_observed(vertices(graphs), [F.count(F.lit(1)).alias("n")])
     n_survivors = int(m["n"])
     out = []
     k = 1
@@ -2689,9 +2581,7 @@ def core_numbers(
             "graph_id", "vertex", F.coalesce("deg", F.lit(0)).alias("deg")
         )
         dropped = with_deg.where(F.col("deg") < k).select("graph_id", "vertex")
-        dropped, m = barrier_observed(
-            dropped, [F.count(F.lit(1)).alias("n")], ckdir=ck
-        )
+        dropped, m = barrier_observed(dropped, [F.count(F.lit(1)).alias("n")])
         n_dropped = int(m["n"])
         if n_dropped == 0:
             k += 1
@@ -2702,7 +2592,6 @@ def core_numbers(
         survivors, m = barrier_observed(
             survivors.join(dropped, ["graph_id", "vertex"], "left_anti"),
             [F.count(F.lit(1)).alias("n")],
-            ckdir=ck,
         )
         n_survivors = int(m["n"])
     else:
@@ -2887,7 +2776,6 @@ def katz_centrality(
     iterations: int = 8,
     alpha: float = 0.05,
     beta: float = 1.0,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Fixed-iteration Katz centrality: x_{t+1}(v) = beta + alpha *
     sum over in-neighbors u of x_t(u), x_0 = beta — the attenuated
@@ -2900,12 +2788,10 @@ def katz_centrality(
     from pyspark.storagelevel import StorageLevel
 
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    ck = checkpoint_dir(spark)
-    base = vertices(graphs).transform(barrier_t(eager=True, ckdir=ck))
+    base = barrier(vertices(graphs), eager=True)
     x = barrier(
         base.select("graph_id", "vertex", F.lit(float(beta)).alias("score")),
         eager=True,
-        ckdir=ck,
     )
     for it in range(1, iterations + 1):
         r, e = x.alias("r"), edges.alias("e")
@@ -2931,7 +2817,7 @@ def katz_centrality(
                 + F.lit(float(alpha)) * F.coalesce(F.col("received"), F.lit(0.0))
             ).alias("score"),
         )
-        if it % checkpoint_every == 0 or it == iterations:
-            x = barrier(x, eager=True, ckdir=ck)
+        if it % 3 == 0 or it == iterations:
+            x = barrier(x, eager=True)
     edges.unpersist()
     return x

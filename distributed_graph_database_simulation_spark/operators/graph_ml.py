@@ -34,9 +34,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ..session import barrier, checkpoint_dir
+from ..session import barrier
 
 _WALK_HASH_HEX = 15  # 60-bit hash: bigint-safe, engine-portable (md5)
+
+# Walk loops checkpoint eagerly every 2 steps, so each lazily-checkpointed
+# segment's plan is at most two chained step-joins deep: deeper plans
+# multiply whole-stage codegen compile time on the first run (r15 A/B:
+# cadence 8 doubled the cold wall vs cadence 2; barrier placement never
+# changes results).
+WALK_CHECKPOINT_EVERY = 2
 
 
 def _walk_hash(step: int, seed: int):
@@ -68,7 +75,6 @@ def random_walks(
     walks_per_vertex: int = 1,
     walk_length: int = 8,
     seed: int = 1,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """DeepWalk-style uniform random walks from every vertex.
 
@@ -78,15 +84,9 @@ def random_walks(
     Neighbor choice at step t is the ``H mod outdeg``-th out-neighbor in
     ascending-dst order — uniform per step, deterministic in
     (graph_id, start, walk_no, step, seed).
-
-    ``checkpoint_every=2`` keeps each lazily-checkpointed segment's plan
-    at most two chained step-joins deep: deeper plans multiply whole-stage
-    codegen compile time on the first run (r15 A/B: cadence 8 doubled the
-    cold wall vs cadence 2; barrier placement never changes results).
     """
     from pyspark.storagelevel import StorageLevel
 
-    ck = checkpoint_dir(spark)
     e = edges.select("graph_id", "src", "dst")
     ranked = (
         e.withColumn(
@@ -121,7 +121,6 @@ def random_walks(
             F.col("start").alias("vertex"),
         ),
         eager=True,
-        ckdir=ck,
     )
     segments = [frontier]
     for step in range(1, walk_length + 1):
@@ -163,8 +162,8 @@ def random_walks(
                 F.col("rk.dst").alias("vertex"),
             )
         )
-        eager = step % checkpoint_every == 0 or step == walk_length
-        frontier = barrier(frontier, eager=eager, ckdir=ck)
+        eager = step % WALK_CHECKPOINT_EVERY == 0 or step == walk_length
+        frontier = barrier(frontier, eager=eager)
         segments.append(frontier)
     out = segments[0]
     for seg in segments[1:]:
@@ -249,7 +248,6 @@ def node2vec_walks(
     walks_per_vertex: int = 1,
     walk_length: int = 8,
     seed: int = 2,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """node2vec biased second-order random walks from every vertex.
 
@@ -275,7 +273,6 @@ def node2vec_walks(
     """
     from pyspark.storagelevel import StorageLevel
 
-    ck = checkpoint_dir(spark)
     total_walks = (graphs.agg(F.sum("n")).first()[0] or 0) * walks_per_vertex
     broadcast_frontier = total_walks <= 2_000_000
     e = edges.select("graph_id", "src", "dst").distinct()
@@ -311,7 +308,6 @@ def node2vec_walks(
             F.col("start").alias("vertex"),
         ),
         eager=True,
-        ckdir=ck,
     )
     segments = [frontier.drop("prev")]
     for step in range(1, walk_length + 1):
@@ -378,8 +374,8 @@ def node2vec_walks(
             "prev",
             "vertex",
         )
-        eager = step % checkpoint_every == 0 or step == walk_length
-        frontier = barrier(frontier, eager=eager, ckdir=ck)
+        eager = step % WALK_CHECKPOINT_EVERY == 0 or step == walk_length
+        frontier = barrier(frontier, eager=eager)
         segments.append(frontier.drop("prev"))
     out = segments[0]
     for seg in segments[1:]:
@@ -427,7 +423,6 @@ def simrank(
     """
     from pyspark.storagelevel import StorageLevel
 
-    ck = checkpoint_dir(spark)
     ine = edges.select(
         "graph_id", F.col("dst").alias("v"), F.col("src").alias("nbr")
     ).distinct()
@@ -460,7 +455,7 @@ def simrank(
         .otherwise(F.lit(0))
         .cast("bigint"),
     )
-    state = barrier(state, eager=True, ckdir=ck)
+    state = barrier(state, eager=True)
     num2 = 2 * SIMRANK_C_NUM  # 8: doubled numerator for half-up rounding
     den2 = 2 * SIMRANK_C_DEN  # 10
     for _ in range(iterations):
@@ -519,7 +514,7 @@ def simrank(
                 .alias("s"),
             )
         )
-        state = barrier(state, eager=True, ckdir=ck)
+        state = barrier(state, eager=True)
     out = state.where((F.col("a") < F.col("b")) & (F.col("s") > 0)).select(
         "graph_id", "a", "b", F.col("s").alias("sim_micro")
     )
@@ -558,7 +553,6 @@ def hits(
     """
     from pyspark.storagelevel import StorageLevel
 
-    ck = checkpoint_dir(spark)
     e = edges.select("graph_id", "src", "dst").distinct().persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -571,7 +565,7 @@ def hits(
         F.lit(HITS_MICRO).cast("bigint").alias("hub"),
         F.lit(HITS_MICRO).cast("bigint").alias("auth"),
     )
-    state = barrier(state, eager=True, ckdir=ck)
+    state = barrier(state, eager=True)
 
     def _normalize(raw: DataFrame, col: str) -> DataFrame:
         mx = F.max(col).over(Window.partitionBy("graph_id"))
@@ -634,7 +628,7 @@ def hits(
         state = hub.join(auth, ["graph_id", "vertex"]).select(
             "graph_id", "vertex", "hub", "auth"
         )
-        state = barrier(state, eager=True, ckdir=ck)
+        state = barrier(state, eager=True)
     out = state.select(
         "graph_id",
         "vertex",
@@ -969,13 +963,12 @@ def wl_labels(
     build a 10^6-element array; cap degrees upstream for power-law
     corpora). Returns (graph_id, vertex, label string).
     """
-    from ..session import barrier, checkpoint_dir
+    from ..session import barrier
 
-    ck = checkpoint_dir(spark)
     from .graph_analytics import undirected, vertices
 
     ue = undirected(edges).where(F.col("src") != F.col("dst"))
-    ue = barrier(ue, eager=True, ckdir=ck)
+    ue = barrier(ue, eager=True)
     deg = ue.groupBy("graph_id", F.col("src").alias("vertex")).agg(
         F.count("*").alias("deg")
     )
@@ -988,7 +981,7 @@ def wl_labels(
             F.coalesce(F.col("deg"), F.lit(0)).cast("string").alias("label"),
         )
     )
-    labels = barrier(labels, eager=True, ckdir=ck)
+    labels = barrier(labels, eager=True)
     for _ in range(iterations):
         lb, e = labels.alias("lb"), ue.alias("e")
         nbr = (
@@ -1021,7 +1014,7 @@ def wl_labels(
                 ).alias("label"),
             )
         )
-        labels = barrier(labels, eager=True, ckdir=ck)
+        labels = barrier(labels, eager=True)
     return labels
 
 

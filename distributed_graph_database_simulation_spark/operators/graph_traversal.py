@@ -38,7 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import barrier, barrier_observed, checkpoint_dir
+from ..session import barrier, barrier_observed
 
 DEFAULT_KERNEL_MAX_NODES = 100_000
 
@@ -57,7 +57,6 @@ def bfs_levels(
     edges: DataFrame,
     starts: DataFrame | Iterable[tuple[int, int]],
     max_levels: int = 10_000,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Distributed level-synchronous BFS over ``edges(graph_id, src, dst)``.
 
@@ -73,9 +72,8 @@ def bfs_levels(
     from pyspark.storagelevel import StorageLevel
 
     edges = edges.repartition("graph_id", "src").persist(StorageLevel.MEMORY_AND_DISK)
-    ck = checkpoint_dir(spark)
     frontier = _starts_df(spark, starts).withColumn("level", F.lit(0).cast("int"))
-    visited = barrier(frontier, eager=True, ckdir=ck)
+    visited = barrier(frontier, eager=True)
     frontier = visited
     for level in range(1, max_levels + 1):
         # Explicit aliases: after checkpointing, frontier columns carry the
@@ -95,13 +93,13 @@ def bfs_levels(
         # the former lazy-checkpoint + count() idiom still paid the count
         # query's own jobs). Checkpoint = the reference's level barrier.
         next_frontier, m = barrier_observed(
-            next_frontier, [F.count(F.lit(1)).alias("n")], ckdir=ck
+            next_frontier, [F.count(F.lit(1)).alias("n")]
         )
         if int(m["n"]) == 0:
             break
         visited = visited.union(next_frontier)
-        if level % checkpoint_every == 0:
-            visited = barrier(visited, eager=True, ckdir=ck)
+        if level % 5 == 0:
+            visited = barrier(visited, eager=True)
         frontier = next_frontier
     # Every frontier is eagerly checkpointed, so the result never re-reads
     # the edge table: release the cache instead of leaking one per call.
@@ -134,6 +132,18 @@ def _adjacency(pdf: pd.DataFrame) -> dict[int, list[int]]:
     return adj
 
 
+def _check_kernel_size(graph_id: int, start: int, adj: dict[int, list[int]],
+                       max_nodes: int) -> None:
+    """Both kernels hold one whole graph in a single task: refuse a graph
+    with more than ``max_nodes`` vertices instead of exhausting the worker."""
+    n_vertices = len(set(adj) | {d for ds in adj.values() for d in ds} | {start})
+    if n_vertices > max_nodes:
+        raise ValueError(
+            f"graph {graph_id} has {n_vertices} vertices, too large for the "
+            f"kernel path: over the kernel cap {max_nodes}"
+        )
+
+
 def _grouped_with_start(
     edges: DataFrame, starts: DataFrame | Iterable[tuple[int, int]], spark: SparkSession
 ) -> DataFrame:
@@ -164,10 +174,8 @@ def bfs_levels_small(
         graph_id = int(pdf["graph_id"].iloc[0])
         seed_rows = pdf[pdf["is_seed"]]
         start = int(seed_rows["src"].iloc[0])
-        edges_pdf = pdf[~pdf["is_seed"]]
-        if len(edges_pdf) > max_nodes * max_nodes:
-            raise ValueError(f"graph {graph_id} too large for the kernel path")
-        adj = _adjacency(edges_pdf)
+        adj = _adjacency(pdf[~pdf["is_seed"]])
+        _check_kernel_size(graph_id, start, adj, max_nodes)
         level = {start: 0}
         frontier = [start]
         while frontier:
@@ -206,13 +214,7 @@ def dfs_leaves(
         graph_id = int(pdf["graph_id"].iloc[0])
         start = int(pdf[pdf["is_seed"]]["src"].iloc[0])
         adj = _adjacency(pdf[~pdf["is_seed"]])
-        n_vertices = len(set(adj) | {d for ds in adj.values() for d in ds} | {start})
-        if n_vertices > max_nodes:
-            raise ValueError(
-                f"graph {graph_id} has {n_vertices} vertices, over the "
-                f"kernel cap {max_nodes}; DFS is order-dependent and has no "
-                "distributed form"
-            )
+        _check_kernel_size(graph_id, start, adj, max_nodes)
         # Explicit-stack DFS (recursion on a deep path would overflow the C
         # stack and kill the worker, not raise): each frame keeps its
         # neighbor iterator so descend/backtrack order matches the recursive

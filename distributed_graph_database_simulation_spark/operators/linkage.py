@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import barrier_t, checkpoint_dir
+from ..session import barrier
 from ..sources.tables import load_table, spread_small_scan
 
 LINK_Q = 4          # gram width: an edit invalidates <= q grams
@@ -187,26 +187,21 @@ def entity_clusters_df(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     match-proportional, not corpus-proportional, at any scale. The
     canonical record (``is_canonical``) is the min rec_id of its entity.
     """
-    from .graph_analytics import fused_min_label_loop
+    from .graph_analytics import min_label_loop
 
-    ck = checkpoint_dir(spark)
-    edges = (
+    edges = barrier(
         pairs.select(F.col("rec_a").alias("src"), F.col("rec_b").alias("dst"))
         .union(pairs.select(F.col("rec_b").alias("src"), F.col("rec_a").alias("dst")))
-        .distinct()
-        .transform(barrier_t(eager=True, ckdir=ck))
+        .distinct(),
+        eager=True,
     )
-    labels = (
+    labels = barrier(
         edges.select(F.col("src").alias("rec_id"))
         .distinct()
-        .withColumn("entity_id", F.col("rec_id"))
-        .transform(barrier_t(eager=True, ckdir=ck))
+        .withColumn("entity_id", F.col("rec_id")),
+        eager=True,
     )
-    # Shared min-label loop (fuse=1 — see the batch-of-K A/B note in
-    # graph_analytics.fused_min_label_loop: fusing measured no win).
-    labels = fused_min_label_loop(
-        labels, edges, ["rec_id"], "entity_id", ck, max_iterations=50
-    )
+    labels = min_label_loop(labels, edges, ["rec_id"], "entity_id", max_iterations=50)
     return labels.select(
         "rec_id",
         "entity_id",

@@ -18,16 +18,6 @@ def get_spark(app_name: str = "distributed_graph_database_simulation_spark",
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
-    # Python UDF workers must be able to import this package (applyInPandas
-    # kernels reference module-level helpers, which cloudpickle serializes by
-    # name). Prepend the package's parent dir to PYTHONPATH before the JVM
-    # spawns workers; on a real cluster the equivalent is --py-files.
-    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    existing = os.environ.get("PYTHONPATH", "")
-    if pkg_parent not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            f"{pkg_parent}{os.pathsep}{existing}" if existing else pkg_parent
-        )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -62,21 +52,8 @@ def get_spark(app_name: str = "distributed_graph_database_simulation_spark",
 # RELIABLE checkpoints there instead of executor-local ones.
 CHECKPOINT_DIR_CONF = "spark.graft.checkpointDir"
 
-_UNSET = object()  # barrier(ckdir=...) sentinel: "look the conf up yourself"
 
-
-def checkpoint_dir(spark: SparkSession) -> str | None:
-    """Resolve the reliable-checkpoint directory conf (None = local mode).
-
-    Superstep loops call this ONCE per operator invocation and thread the
-    result into each :func:`barrier` — a conf read is a ~5 ms py4j round
-    trip, which multiplied by every barrier of every superstep would tax
-    the loops for nothing (the conf cannot meaningfully change mid-loop).
-    """
-    return spark.conf.get(CHECKPOINT_DIR_CONF, None)
-
-
-def barrier(df: DataFrame, eager: bool = True, ckdir=_UNSET) -> DataFrame:
+def barrier(df: DataFrame, eager: bool = True) -> DataFrame:
     """Lineage-truncation barrier for superstep loops (BFS/SSSP/CC/PageRank/
     k-core/LPA/dedup-clustering).
 
@@ -85,33 +62,25 @@ def barrier(df: DataFrame, eager: bool = True, ckdir=_UNSET) -> DataFrame:
     real cluster a long-running loop must survive executor loss, so setting
     ``spark.graft.checkpointDir`` (HDFS/S3 path) flips every barrier to a
     reliable ``checkpoint()`` under that directory; results are identical,
-    only the storage tier changes. The SparkContext checkpoint dir is set
+    only the storage tier changes. The conf is read on every call (a
+    sub-millisecond lookup next to the checkpoint itself), so a flip takes
+    effect at the next barrier. The SparkContext checkpoint dir is set
     lazily on first use so merely importing the package never touches
     storage.
-
-    ``ckdir``: pass :func:`checkpoint_dir`'s result when calling from a
-    loop (one conf read per operator, not per barrier); omit for one-off
-    barriers.
     """
-    if ckdir is _UNSET:
-        ckdir = checkpoint_dir(df.sparkSession)
-    if not ckdir:
+    directory = df.sparkSession.conf.get(CHECKPOINT_DIR_CONF, None)
+    if not directory:
         return df.localCheckpoint(eager=eager)
     sc = df.sparkSession.sparkContext
     # setCheckpointDir materializes a UUID subdir (scheme-prefixed), so the
     # round-trip value never equals the conf — remember what we set instead.
-    if getattr(sc, "_graft_checkpoint_dir", None) != ckdir:
-        sc.setCheckpointDir(ckdir)
-        sc._graft_checkpoint_dir = ckdir
+    if getattr(sc, "_graft_checkpoint_dir", None) != directory:
+        sc.setCheckpointDir(directory)
+        sc._graft_checkpoint_dir = directory
     return df.checkpoint(eager=eager)
 
 
-def barrier_t(eager: bool = True, ckdir=_UNSET):
-    """:func:`barrier` curried for fluent chains: ``df.transform(barrier_t())``."""
-    return lambda df: barrier(df, eager=eager, ckdir=ckdir)
-
-
-def barrier_observed(df: DataFrame, metrics: list, ckdir=_UNSET):
+def barrier_observed(df: DataFrame, metrics: list):
     """Eager :func:`barrier` that also evaluates aggregate ``metrics`` over
     the SAME materialization pass (r16, guide §1 job count).
 
@@ -134,5 +103,5 @@ def barrier_observed(df: DataFrame, metrics: list, ckdir=_UNSET):
     from pyspark.sql import Observation
 
     obs = Observation()
-    out = barrier(df.observe(obs, *metrics), eager=True, ckdir=ckdir)
+    out = barrier(df.observe(obs, *metrics), eager=True)
     return out, obs.get

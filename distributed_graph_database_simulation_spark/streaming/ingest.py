@@ -233,10 +233,9 @@ def dedup_ingest_batch(
     # pair-finder AND both store writes (r10 — previously the pipeline ran
     # twice per ingest call). MEMORY_AND_DISK: spill, never recompute.
     sh = _shingled(batch).persist(StorageLevel.MEMORY_AND_DISK)
-    # The banding table is ALSO consumed twice (pair-finder + store write),
-    # and the 128-permutation minhash aggregate feeding it is the batch's
-    # single most expensive stage — persisting sh alone still re-ran that
-    # aggregate per consumer (r13 profile: ~1.7-3.8 s per extra pass).
+    # The banding table is ALSO consumed twice (pair-finder + store write):
+    # persist it so the minhash signature kernel feeding it runs once per
+    # batch, not once per consumer (persisting sh alone would not).
     bands = _bands(_minhash_sigs(sh)).persist(StorageLevel.MEMORY_AND_DISK)
     # Exclude this batch's OWN partition from the store side: on a
     # replayed micro-batch the store already holds the batch's bands,

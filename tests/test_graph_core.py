@@ -2,6 +2,8 @@
 
 import os
 
+import pytest
+
 from distributed_graph_database_simulation_spark import fixtures
 from distributed_graph_database_simulation_spark.sources import (
     GraphStore,
@@ -55,31 +57,47 @@ def test_graph_store_add_modify(spark, tmp_path):
 
 def test_reliable_checkpoint_switch_matches_local(spark, tmp_path):
     """SCALE.md promises the superstep barrier flips localCheckpoint ->
-    reliable checkpoint with one conf; run a real loop both ways and pin
-    identical results plus actual checkpoint files on disk."""
+    reliable checkpoint with one conf; run a real loop of each family
+    (min-label CC, PageRank, level-synchronous BFS) both ways and pin
+    identical results plus actual checkpoint files under the directory
+    set for that loop."""
     from distributed_graph_database_simulation_spark.operators.graph_analytics import (
         connected_components,
+        pagerank,
+    )
+    from distributed_graph_database_simulation_spark.operators.graph_traversal import (
+        bfs_levels,
     )
     from distributed_graph_database_simulation_spark.session import CHECKPOINT_DIR_CONF
 
     graphs = fixtures.fixture_graphs_df(spark)
     edges = fixtures.fixture_edges_df(spark)
-    local = {
-        (r.graph_id, r.vertex, r.component)
-        for r in connected_components(spark, graphs, edges).collect()
-    }
-    ckdir = str(tmp_path / "reliable_ck")
-    spark.conf.set(CHECKPOINT_DIR_CONF, ckdir)
-    try:
-        reliable = {
-            (r.graph_id, r.vertex, r.component)
+    loops = {
+        "cc": lambda: {
+            (r.graph_id, r.vertex): r.component
             for r in connected_components(spark, graphs, edges).collect()
-        }
-    finally:
-        spark.conf.unset(CHECKPOINT_DIR_CONF)
-    assert reliable == local and local
-    ck_files = [f for _, _, fs in os.walk(ckdir) for f in fs]
-    assert ck_files, "reliable mode must write checkpoint files under the conf dir"
+        },
+        "pagerank": lambda: {
+            (r.graph_id, r.vertex): r.rank
+            for r in pagerank(spark, graphs, edges, iterations=4).collect()
+        },
+        "bfs": lambda: {
+            (r.graph_id, r.vertex): r.level
+            for r in bfs_levels(spark, edges, [(7, 0), (5, 0)]).collect()
+        },
+    }
+    for name, run in loops.items():
+        local = run()
+        ckdir = str(tmp_path / f"reliable_ck_{name}")
+        spark.conf.set(CHECKPOINT_DIR_CONF, ckdir)
+        try:
+            reliable = run()
+        finally:
+            spark.conf.unset(CHECKPOINT_DIR_CONF)
+        assert local, name
+        assert reliable == pytest.approx(local, rel=1e-12), name
+        ck_files = [f for _, _, fs in os.walk(ckdir) for f in fs]
+        assert ck_files, f"{name}: reliable mode must write checkpoint files under the conf dir"
 
 
 def test_edge_diff_between_store_snapshots(spark, tmp_path):

@@ -70,6 +70,16 @@ def test_dfs_max_nodes_guard_enforced(spark):
         dfs_leaves(spark, chain, [(42, 0)], max_nodes=10).collect()
 
 
+def test_bfs_max_nodes_guard_counts_vertices(spark):
+    """The BFS kernel caps vertices like DFS does: a 20-vertex path (19
+    edges, far under max_nodes**2) is still refused at max_nodes=5."""
+    path = spark.createDataFrame(
+        [(43, i, i + 1) for i in range(19)], "graph_id INT, src INT, dst INT"
+    ).coalesce(1)
+    with pytest.raises(Exception, match="too large"):
+        bfs_levels_small(spark, path, [(43, 0)], max_nodes=5).collect()
+
+
 def test_bfs_isolated_start(spark, edges):
     # start vertex with no outgoing/incoming edges in that graph: level-0 row only
     out = bfs_levels_small(spark, edges, [(5, 2)])

@@ -4,8 +4,8 @@
    ``xxhash64(lit(i) INT, base BIGINT)`` BIT-EXACTLY — same hash family,
    same signatures, so every downstream band hash / candidate set / oracle
    is unchanged by the §4 vectorization.
-2. The fused min-label loop (batch-of-K supersteps, §1/§2 job-count
-   reduction) converges to exactly the classic one-step-per-job fixpoint.
+2. The shared min-label loop reaches the fixpoint and honours its
+   superstep cap.
 3. The spread opt-outs: tiny-kernel mm paths carry NO round-robin exchange
    (r15 verdict #1 pin) while the heavy codec path keeps the spread.
 4. spread_small_scan's size gate: a wide-or-big scan is returned unchanged.
@@ -54,12 +54,11 @@ def test_sig_kernel_handles_empty_batches(spark):
     assert dedup._minhash_sigs(empty).count() == 0
 
 
-def test_fused_min_label_equals_stock_loop(spark):
-    """Pin: fused_min_label_loop == the one-step-per-job loop's fixpoint on
-    a graph whose diameter is NOT a multiple of the fuse factor (the
-    convergence check only runs at block boundaries)."""
+def test_min_label_loop_reaches_fixpoint(spark):
+    """Pin: min_label_loop converges to the min reachable label on a
+    diameter-6 path, a triangle and an isolate."""
     from distributed_graph_database_simulation_spark.operators.graph_analytics import (
-        fused_min_label_loop,
+        min_label_loop,
     )
 
     # path 0-1-2-3-4-5-6 (diameter 6) + triangle 10-11-12 + isolate 20
@@ -70,21 +69,20 @@ def test_fused_min_label_equals_stock_loop(spark):
     labels = spark.createDataFrame(
         [(v, v) for v in verts], "vertex long, lbl long"
     )
-    for fuse in (1, 3, 4, 7):
-        got = {
-            r.vertex: r.lbl
-            for r in fused_min_label_loop(
-                labels, edges, ["vertex"], "lbl", None, max_iterations=50, fuse=fuse
-            ).collect()
-        }
-        assert got == {**{v: 0 for v in range(7)}, 10: 10, 11: 10, 12: 10, 20: 20}, fuse
+    got = {
+        r.vertex: r.lbl
+        for r in min_label_loop(
+            labels, edges, ["vertex"], "lbl", max_iterations=50
+        ).collect()
+    }
+    assert got == {**{v: 0 for v in range(7)}, 10: 10, 11: 10, 12: 10, 20: 20}
 
 
-def test_fused_loop_respects_max_iterations(spark):
-    """max_iterations bounds TOTAL supersteps across blocks: a 6-step path
-    capped at 2 steps must show only 2 hops of propagation."""
+def test_min_label_loop_respects_max_iterations(spark):
+    """max_iterations bounds the supersteps: a 6-step path capped at 2
+    steps must show only 2 hops of propagation."""
     from distributed_graph_database_simulation_spark.operators.graph_analytics import (
-        fused_min_label_loop,
+        min_label_loop,
     )
 
     base_edges = [(i, i + 1) for i in range(6)]
@@ -93,8 +91,8 @@ def test_fused_loop_respects_max_iterations(spark):
     labels = spark.createDataFrame([(v, v) for v in range(7)], "vertex long, lbl long")
     got = {
         r.vertex: r.lbl
-        for r in fused_min_label_loop(
-            labels, edges, ["vertex"], "lbl", None, max_iterations=2, fuse=4
+        for r in min_label_loop(
+            labels, edges, ["vertex"], "lbl", max_iterations=2
         ).collect()
     }
     assert got == {0: 0, 1: 0, 2: 0, 3: 1, 4: 2, 5: 3, 6: 4}

@@ -37,9 +37,9 @@ def _minhash_sigs_plan(spark, sf_dir):
 
 
 def _cc_superstep_plan(spark, sf_dir):
-    """One convergence-check block of the g_connected_components_scale loop:
-    the plan between two barriers (stock = 1 update step per job; fused =
-    SUPERSTEP_FUSE steps per job). The loop itself is driver-side."""
+    """One superstep of the g_connected_components_scale loop: the plan
+    between two barriers (one min_label_step). The loop itself is
+    driver-side."""
     from distributed_graph_database_simulation_spark.operators import (
         graph_analytics as GA,
     )
@@ -53,66 +53,11 @@ def _cc_superstep_plan(spark, sf_dir):
         "CAST(1 AS INT) AS graph_id", "src", "dst"
     )
     graphs = spark.createDataFrame([(1, fixtures.SCALE_V)], GRAPH_SCHEMA)
-    ck = None
-    ue = GA.barrier(GA.undirected(edges), eager=True, ckdir=ck)
+    ue = GA.barrier(GA.undirected(edges), eager=True)
     labels = GA.barrier(
-        GA.vertices(graphs).withColumn("component", F.col("vertex")),
-        eager=True,
-        ckdir=ck,
+        GA.vertices(graphs).withColumn("component", F.col("vertex")), eager=True
     )
-    if hasattr(GA, "fused_min_label_loop"):
-        # after: one fused block (build the same lazy plan the loop runs)
-        fuse = GA.SUPERSTEP_FUSE
-        cur = labels
-        for j in range(fuse):
-            lbl, e = cur.alias("lbl"), ue.alias("e")
-            msgs = lbl.join(
-                e,
-                on=(F.col("lbl.graph_id") == F.col("e.graph_id"))
-                & (F.col("lbl.vertex") == F.col("e.src")),
-            ).select(
-                F.col("e.graph_id").alias("graph_id"),
-                F.col("e.dst").alias("vertex"),
-                F.col("lbl.component").alias("component"),
-            )
-            if j == fuse - 1:
-                cur = (
-                    cur.withColumn("_old", F.col("component"))
-                    .unionByName(msgs.withColumn("_old", F.lit(None).cast("int")))
-                    .groupBy("graph_id", "vertex")
-                    .agg(
-                        F.min("component").alias("component"),
-                        F.max("_old").alias("_old"),
-                    )
-                )
-            else:
-                cur = (
-                    cur.unionByName(msgs)
-                    .groupBy("graph_id", "vertex")
-                    .agg(F.min("component").alias("component"))
-                )
-        return cur
-    # before: one stock superstep
-    lbl, e = labels.alias("lbl"), ue.alias("e")
-    msgs = lbl.join(
-        e,
-        on=(F.col("lbl.graph_id") == F.col("e.graph_id"))
-        & (F.col("lbl.vertex") == F.col("e.src")),
-    ).select(
-        F.col("e.graph_id").alias("graph_id"),
-        F.col("e.dst").alias("vertex"),
-        F.col("lbl.component").alias("component"),
-        F.lit(None).cast("int").alias("old_component"),
-    )
-    return (
-        labels.withColumn("old_component", F.col("component"))
-        .unionByName(msgs)
-        .groupBy("graph_id", "vertex")
-        .agg(
-            F.min("component").alias("component"),
-            F.max("old_component").alias("old_component"),
-        )
-    )
+    return GA.min_label_step(labels, ue, ["graph_id", "vertex"], "component")
 
 
 SPECIAL = {
