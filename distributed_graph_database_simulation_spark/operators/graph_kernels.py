@@ -2,8 +2,8 @@
 
 The reference's graphs are tiny (n <= 100 per ``secondary_server.c:91``),
 so iterative analytics on them are latency-bound, not data-bound: a
-superstep loop pays ~0.1-0.3 s of local scheduler floor per shuffle stage,
-~40 stages for 5 PageRank iterations. These kernels run the WHOLE
+superstep loop pays ~0.1-0.3 s of local scheduler floor per Spark job, and
+the PageRank loop runs 5-7 jobs per iteration. These kernels run the WHOLE
 algorithm inside one Arrow batch per graph — one shuffle total, parallel
 across graphs — which is also the right 100 TB plan for a corpus of many
 small graphs (the superstep loops in ``graph_analytics`` remain the plan

@@ -4,7 +4,7 @@ Operators that persist() intermediates fall in two classes:
 
 - **Iterative graph algorithms** own their caches: they materialize rounds
   internally and unpersist before returning (e.g.
-  ``graph_analytics.py`` pagerank/cc/sssp — persist + unpersist pairs).
+  ``graph_analytics.py`` cc/sssp — persist + unpersist pairs).
 - **Lazy-plan operators** (dedup pair-finders, text tf/top tables) persist
   blocks that the RETURNED plan still needs, so they cannot release them
   themselves; the HARNESS that materializes the plan is the owner that
@@ -105,7 +105,12 @@ def test_iterative_graph_ops_release_their_own_caches(spark, sf_dir, tmp_path):
     _drain_stray_checkpoints(spark)
     spark.conf.set(CHECKPOINT_DIR_CONF, str(tmp_path / "ck"))
     try:
-        for name in ("g_pagerank_weighted_scale", "g_cc_contraction_scale"):
+        for name in (
+            "g_pagerank_scale",
+            "g_pagerank_weighted_scale",
+            "g_pagerank_personalized_scale",
+            "g_cc_contraction_scale",
+        ):
             q[name](spark, sf_dir).count()
             assert _n_persisted(spark) == 0, f"{name} leaked a persisted block"
     finally:

@@ -100,6 +100,120 @@ def test_reliable_checkpoint_switch_matches_local(spark, tmp_path):
         assert ck_files, f"{name}: reliable mode must write checkpoint files under the conf dir"
 
 
+# Three graphs in one input: 1 has a dangling sink (3) and a zero-weight
+# edge, 2 has no edges, 3 has an isolated vertex (4). Rows: (graph, src,
+# dst, weight).
+_PR_GRAPHS = [(1, 4), (2, 3), (3, 5)]
+_PR_EDGES = [
+    (1, 0, 1, 2), (1, 1, 2, 1), (1, 2, 0, 3), (1, 0, 3, 1), (1, 2, 1, 0),
+    (3, 0, 1, 1), (3, 1, 0, 4), (3, 1, 2, 2), (3, 2, 3, 5), (3, 3, 0, 1),
+]
+_PR_SOURCES = [(1, 0), (2, 1), (3, 1), (3, 3)]
+
+
+def _pr_inputs(spark):
+    graphs = spark.createDataFrame(_PR_GRAPHS, "graph_id INT, n INT")
+    edges = spark.createDataFrame(_PR_EDGES, "graph_id INT, src INT, dst INT, weight INT")
+    sources = spark.createDataFrame(_PR_SOURCES, "graph_id INT, vertex INT")
+    return graphs, edges, sources
+
+
+def test_pagerank_jobs_per_iteration(spark):
+    """Each PageRank iteration is one barrier action over the folded vertex
+    state, which adaptive execution runs as 7 Spark jobs (4 shuffle-map, 2
+    broadcast, 1 result) when, as here, the planner cannot size the
+    inputs. A loop that re-runs earlier iterations or re-joins its loop
+    invariants needs more."""
+    import uuid
+
+    from distributed_graph_database_simulation_spark.operators.graph_analytics import (
+        pagerank,
+    )
+
+    graphs, edges, _ = _pr_inputs(spark)
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for iterations in (3, 6):
+            group = f"pagerank-budget-{iterations}-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            pagerank(spark, graphs, edges, iterations=iterations).collect()
+            jobs[iterations] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert (jobs[6] - jobs[3]) / 3 <= 7, jobs
+
+
+def _np_pagerank(n, edges, tele, iterations, damping=0.85):
+    """Dense power iteration: rank flows along each (src, dst, w) edge in
+    proportion w / out-weight(src); vertices with no out-weight are
+    dangling and their mass restarts along ``tele``."""
+    import numpy as np
+
+    src = np.array([s for s, _, _ in edges], dtype=int)
+    dst = np.array([d for _, d, _ in edges], dtype=int)
+    w = np.array([x for _, _, x in edges], dtype=float)
+    out = np.zeros(n)
+    np.add.at(out, src, w)
+    dangling = out == 0
+    rank = tele.copy()
+    for _ in range(iterations):
+        received = np.zeros(n)
+        np.add.at(received, dst, rank[src] * w / out[src])
+        rank = (1 - damping) * tele + damping * (received + rank[dangling].sum() * tele)
+    return rank
+
+
+@pytest.mark.parametrize("variant", ["pagerank", "pagerank_weighted", "personalized_pagerank"])
+def test_pagerank_family_multi_graph_matches_numpy(spark, tmp_path, variant):
+    """The three PageRank operators share one superstep loop; over several
+    graphs at once each graph keeps its own teleport vector and dangling
+    mass, and no persisted RDD outlives the call (run under reliable
+    checkpoints, where the barriers persist nothing themselves)."""
+    import numpy as np
+
+    from distributed_graph_database_simulation_spark.operators import graph_analytics as GA
+    from distributed_graph_database_simulation_spark.session import CHECKPOINT_DIR_CONF
+    from test_cache_ownership import _drain_stray_checkpoints, _n_persisted
+
+    graphs, edges, sources = _pr_inputs(spark)
+    iterations = 7
+    run = {
+        "pagerank": lambda: GA.pagerank(spark, graphs, edges, iterations=iterations),
+        "pagerank_weighted": lambda: GA.pagerank_weighted(
+            spark, graphs, edges, iterations=iterations
+        ),
+        "personalized_pagerank": lambda: GA.personalized_pagerank(
+            spark, graphs, edges, sources, iterations=iterations
+        ),
+    }[variant]
+    spark.catalog.clearCache()
+    _drain_stray_checkpoints(spark)
+    spark.conf.set(CHECKPOINT_DIR_CONF, str(tmp_path / "ck"))
+    try:
+        got = {(r.graph_id, r.vertex): r.rank for r in run().collect()}
+        assert _n_persisted(spark) == 0, f"{variant} leaked a persisted block"
+    finally:
+        spark.conf.unset(CHECKPOINT_DIR_CONF)
+
+    want = {}
+    for g, n in _PR_GRAPHS:
+        if variant == "pagerank_weighted":
+            es = [(s, d, w) for gg, s, d, w in _PR_EDGES if gg == g and w > 0]
+        else:
+            es = [(s, d, 1.0) for gg, s, d, _ in _PR_EDGES if gg == g]
+        if variant == "personalized_pagerank":
+            srcs = [v for gg, v in _PR_SOURCES if gg == g]
+            tele = np.array([1.0 / len(srcs) if v in srcs else 0.0 for v in range(n)])
+        else:
+            tele = np.full(n, 1.0 / n)
+        for v, r in enumerate(_np_pagerank(n, es, tele, iterations)):
+            want[(g, v)] = r
+    assert got.keys() == want.keys()
+    for k, r in want.items():
+        assert abs(got[k] - r) <= 1e-12, (variant, k, got[k], r)
+
+
 def test_edge_diff_between_store_snapshots(spark, tmp_path):
     """AddGraph -> snapshot -> ModifyGraph; edge_diff reports exactly the
     replaced edges (the question the reference's truncate-and-rewrite

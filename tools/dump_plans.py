@@ -60,9 +60,27 @@ def _cc_superstep_plan(spark, sf_dir):
     return GA.min_label_step(labels, ue, ["graph_id", "vertex"], "component")
 
 
+def _pagerank_superstep_plan(spark, sf_dir):
+    """One superstep of the g_pagerank_scale loop: the plan between two
+    barriers (one pagerank_step over the checkpointed vertex state and
+    edge shares)."""
+    from distributed_graph_database_simulation_spark.operators import (
+        graph_analytics as GA,
+    )
+    from distributed_graph_database_simulation_spark.operators.graph_queries import (
+        _scale_graph,
+    )
+    from pyspark.sql import functions as F
+
+    graphs, edges = _scale_graph(spark, sf_dir)
+    state, share = GA.pagerank_tables(GA.uniform_tele(graphs), edges, F.lit(1.0))
+    return GA.pagerank_step(state, share, 0.85)
+
+
 SPECIAL = {
     "minhash_sigs_kernel": _minhash_sigs_plan,
     "cc_superstep_block": _cc_superstep_plan,
+    "pagerank_superstep_block": _pagerank_superstep_plan,
 }
 
 
